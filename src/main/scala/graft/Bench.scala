@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -86,7 +87,7 @@ object Bench {
     // compilation (measured 2-3× on wide-output joins); production clusters
     // run warm executors, so the timed passes are the representative ones.
     ordered.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => }
+      try { fn(spark, sfDir).count() } catch { case NonFatal(_) => }
     }
     // `runs` timed samples per query: pass-major order (all queries, then
     // repeat) so consecutive samples of one query land minutes apart —
@@ -99,7 +100,7 @@ object Bench {
         System.gc()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case NonFatal(_) => false }
         // A failed query must not contribute its (near-zero) time-to-failure
         // to the total: record -1 and list it under "errors".
         (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -127,9 +128,10 @@ object Bench {
     println(s"compact line length: ${line.length}")
     // Print the JSON line LAST — after spark.stop() — so no shutdown logging
     // can land after it. stop() can itself throw (shutdown-hook / FS errors);
-    // the metric line must still be emitted, so swallow and print regardless.
+    // the metric line must still be emitted, so swallow non-fatal errors and
+    // print regardless (a fatal error such as OOM still propagates).
     spark.sparkContext.setLogLevel("ERROR")
-    try spark.stop() catch { case _: Throwable => }
+    try spark.stop() catch { case NonFatal(_) => }
     println(line)
   }
 }

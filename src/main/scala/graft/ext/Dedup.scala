@@ -928,6 +928,8 @@ object Dedup {
     */
   private[graft] def jaccardProbes(index: GramIndex, tauNum: Int,
       tauDen: Int): DataFrame = {
+    require(tauNum >= 1 && tauNum <= tauDen,
+      s"jaccardProbes: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
     val sets = index.sets
     val prefixLen = (col("nn") -
       floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)

@@ -80,6 +80,9 @@ object Opq {
       .groupBy("i", "j")
       .agg(sum(floor(col("xv") * col("qv") * S).cast("long")).as("s"))
       .collect()
+    require(cells.nonEmpty,
+      "crossSums: no (id, vector) pair joins across the two inputs " +
+        s"(empty input or disjoint $idCol sets)")
     val d = cells.iterator.map(r => math.max(r.getInt(0), r.getInt(1)))
       .max + 1
     val m = Array.ofDim[Double](d, d)

@@ -36,10 +36,11 @@ object Upsert {
   /** If `path` is missing but `<path>.old` exists, a previous
     * [[writeAtomic]] crashed between its two renames and the table
     * survives only at the `.old` location: rename it back. Callers that
-    * read `path` before upserting (the streaming sink, any re-run of a
-    * crashed pipeline) must call this BEFORE their existence check —
+    * read `path` before upserting (the streaming sinks, any re-run of a
+    * crashed pipeline) must do this BEFORE their existence check —
     * otherwise they see "no table" and merge against nothing, silently
-    * dropping the accumulated state. Returns true if a restore happened.
+    * dropping the accumulated state; [[current]] does both in that
+    * order. Returns true if a restore happened.
     */
   def recover(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -53,6 +54,66 @@ object Upsert {
       true
     } else false
   }
+
+  /** The table at `path` after [[recover]], or None when there is none
+    * (first run). Only genuine absence is None: any read failure of an
+    * existing table throws, because treating it as "absent" would
+    * overwrite the accumulated state with a single batch.
+    */
+  def current(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[DataFrame] = {
+    recover(spark, path)
+    val target = new org.apache.hadoop.fs.Path(path)
+    if (target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(target)) Some(spark.read.parquet(path))
+    else None
+  }
+
+  /** The exactly-once state-table contract of a streaming sink, written
+    * once. `foreachBatch` delivers at-least-once, so a sink that folds a
+    * micro-batch into persisted state must refuse a batch it already
+    * applied. The state table carries a `batch_id` column, stamped with
+    * the id of the last batch merged, inside the same atomic swap as
+    * the data it guards. One call:
+    *
+    *  1. returns None for an empty batch: no write, and `batch_id` does
+    *     not advance (an empty batch cannot seed a sketch, and advancing
+    *     the id would make a non-empty redelivery of it look applied);
+    *  2. reads the state after [[recover]] (see [[current]]) and returns
+    *     None when `max(batch_id) >= batchId`: a replay;
+    *  3. hands `step` the state without `batch_id` (None on first run);
+    *     `step` returns the new state and a result for the caller;
+    *  4. stamps `batch_id` on the new state and swaps it in with
+    *     [[writeAtomic]], then returns Some(result).
+    *
+    * A result that reads the state (verdicts rendered against it) must
+    * be materialized inside `step`: the swap replaces what it reads.
+    */
+  def mergeBatch[T](batch: DataFrame, path: String, batchId: Long)(
+      step: Option[DataFrame] => (DataFrame, T)): Option[T] =
+    if (batch.isEmpty) None
+    else {
+      val prev = current(batch.sparkSession, path)
+      val applied = prev.map(_.agg(coalesce(max(col("batch_id")),
+        lit(Long.MinValue))).head().getLong(0))
+      if (applied.exists(_ >= batchId)) None
+      else {
+        val (next, out) = step(prev.map(_.drop("batch_id")))
+        writeAtomic(next.withColumn("batch_id", lit(batchId)), path)
+        Some(out)
+      }
+    }
+
+  /** A [[mergeBatch]] state table as its readers see it: recovered from
+    * a torn swap, without the `batch_id` guard column. A missing table
+    * throws.
+    */
+  def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    current(spark, path)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"no state table at $path"))
+      .drop("batch_id")
 
   /** Staged overwrite: write to `<path>.staging`, rename the old table
     * aside to `<path>.old`, swap the staging dir in, then drop the old

@@ -495,22 +495,10 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // First-run means the target genuinely does not exist. Any other
-        // read failure (corruption, transient FS error) must fail the
-        // batch — treating it as "absent" would overwrite the accumulated
-        // state with just this micro-batch.
-        // A previous batch may have crashed mid-swap, leaving the table
-        // only at <targetPath>.old — restore it BEFORE the existence
-        // check, or the merge below would silently drop all accumulated
-        // state and keep just this micro-batch.
-        Upsert.recover(spark, targetPath)
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val tgt = new org.apache.hadoop.fs.Path(targetPath)
-        val exists = tgt.getFileSystem(hconf).exists(tgt)
-        val merged =
-          if (!exists) batch
-          else Upsert.upsert(spark.read.parquet(targetPath), batch, "user_id")
+        // Keyed replace is replay-idempotent: no batch-id guard needed,
+        // only the recover-before-exists rule that `current` enforces.
+        val merged = Upsert.current(batch.sparkSession, targetPath)
+          .fold(batch)(Upsert.upsert(_, batch, "user_id"))
         Upsert.writeAtomic(merged, targetPath)
       }
     writer.start()
@@ -622,15 +610,6 @@ object EventStreams {
       }
       .start()
 
-  /** ST12 — ST9's streaming ingest gate grown the STRING signal: each
-    * micro-batch renders the FOUR-signal verdict
-    * ([[graft.ext.Dedup.ingestGateWithEdit]] — exact / Jaccard / simhash /
-    * edit-distance-on-key against the four frozen corpus structures,
-    * including the [[graft.ext.Fuzzy.segmentIndex]]). The arriving stream
-    * must carry both textCol and the short key column `editCol` (derive it
-    * upstream with a select — it is a pure projection). Sink receives
-    * (idCol, exact_dup, jac_dup, sh_dup, ed_dup, admit).
-    */
   /** ST13 batch kernel: survivors of one micro-batch of VECTORS against a
     * frozen corpus SRP signature table — every arriving embedding whose
     * 64-bit [[graft.ext.Similarity.srpSignature]] fingerprint lies within
@@ -768,6 +747,31 @@ object EventStreams {
       }
       .start()
 
+  // ------------------------------------------- exactly-once state tables
+
+  /** The checkpointed plumbing every state-table stage shares: drain what
+    * has arrived (`AvailableNow`) and hand each micro-batch, with its id,
+    * to `kernel`. The kernels fold batches into persisted state through
+    * [[graft.ops.Upsert.mergeBatch]], which makes the at-least-once
+    * `foreachBatch` delivery exactly-once on the state.
+    */
+  private def onArrival(rows: DataFrame, checkpoint: String)(
+      kernel: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(kernel)
+      .start()
+
+  /** [[graft.ops.Upsert.mergeBatch]] for a kernel whose only result is
+    * whether the batch merged.
+    */
+  private def mergeState(batch: DataFrame, path: String, batchId: Long)(
+      step: Option[DataFrame] => DataFrame): Boolean =
+    Upsert.mergeBatch(batch, path, batchId)(prev => (step(prev), ()))
+      .isDefined
+
   /** ST22 — streaming DISTINCT-COUNT maintenance: the persisted state is
     * ONE mergeable HLL sketch (Spark's Datasketches `hll_sketch_agg`);
     * each micro-batch reduces to its own sketch and `hll_union`s into
@@ -781,75 +785,34 @@ object EventStreams {
     * trade-off of mergeability, not an ordering artifact.)
     * State is O(1) (a few KB) regardless of stream volume —
     * the "how many distinct users/documents ever" counter a dashboard
-    * reads at any moment via [[distinctEstimate]]. Same crash contract
-    * as ST16: `Upsert.recover`, a batch-id column inside the atomic
-    * swap, replayed batches skipped (at-least-once ⇒ a re-union is
-    * harmless for HLL, but the guard keeps the contract uniform).
+    * reads at any moment via [[distinctEstimate]]. At-least-once ⇒ a
+    * re-union is harmless for HLL, but the state goes through the same
+    * [[graft.ops.Upsert.mergeBatch]] guard as every other stage.
     */
   def distinctCountOnArrival(rows: DataFrame, keyCol: String,
       targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        distinctMergeBatch(batch, keyCol, targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      distinctMergeBatch(batch, keyCol, targetPath, batchId)
+    }
 
   /** ST22's per-batch kernel (exposed for the replay spec): union one
     * micro-batch's HLL sketch into the persisted single-row sketch
-    * table `(sketch binary, batch_id)` unless `batchId` was already
-    * applied. Returns true when merged.
+    * table `(sketch binary, batch_id)`. An empty batch would yield a
+    * NULL sketch (breaking `hll_union_agg` and [[distinctEstimate]]);
+    * `mergeBatch` skips it. Returns true when merged.
     */
   def distinctMergeBatch(batch: DataFrame, keyCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    // One pass computes sketch + count: an empty micro-batch would
-    // yield a NULL sketch (seeding the table with it breaks
-    // distinctEstimate, and unioning it breaks hll_union_agg), so a
-    // contentless merge is skipped entirely — the batch_id marker must
-    // NOT advance either, or a replayed non-empty sibling of the same
-    // id would be dropped.
-    val aggRow = batch.agg(hll_sketch_agg(col(keyCol)).as("sketch"),
-      count(lit(1)).as("n")).head()
-    if (aggRow.getLong(1) == 0L) return false
-    val bSketch = spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(aggRow.get(0), batchId)),
-      new org.apache.spark.sql.types.StructType()
-        .add("sketch", org.apache.spark.sql.types.BinaryType)
-        .add("batch_id", org.apache.spark.sql.types.LongType))
-    if (!exists) {
-      Upsert.writeAtomic(bSketch, targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = prev.select(col("sketch"))
-          .unionByName(bSketch.select(col("sketch")))
-          .agg(hll_union_agg(col("sketch")).as("sketch"))
-          .select(col("sketch"), lit(batchId).as("batch_id"))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = batch.agg(hll_sketch_agg(col(keyCol)).as("sketch"))
+      prev.fold(b)(_.unionByName(b)
+        .agg(hll_union_agg(col("sketch")).as("sketch")))
     }
-  }
 
   /** Read the ST22 sketch table's current cardinality estimate. */
-  def distinctEstimate(spark: SparkSession, targetPath: String): Long = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath)
+  def distinctEstimate(spark: SparkSession, targetPath: String): Long =
+    Upsert.readState(spark, targetPath)
       .select(hll_sketch_estimate(col("sketch"))).head().getLong(0)
-  }
 
   /** ST25 — streaming BOTTOM-K (KMV) sketch maintenance: ST22's
     * DETERMINISTIC counterpart. The persisted state is the per-group
@@ -860,64 +823,31 @@ object EventStreams {
     * EXACT — the streamed chain equals a single build over the full
     * history bit-for-bit (q214's certificate, live), so a dashboard
     * reading [[bottomKDistinctEstimate]] sees precisely what a cold
-    * rebuild would report. Same crash contract as ST16/ST22:
-    * `Upsert.recover`, batch-id inside the atomic swap, replays
-    * skipped (a set-union replay is harmless, the guard keeps the
-    * contract uniform).
+    * rebuild would report. A set-union replay is harmless; the
+    * [[graft.ops.Upsert.mergeBatch]] guard keeps the contract uniform.
     */
   def bottomKOnArrival(rows: DataFrame, groupCol: String, elemCol: String,
       k: Int, targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bottomKMergeBatch(batch, groupCol, elemCol, k, targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      bottomKMergeBatch(batch, groupCol, elemCol, k, targetPath, batchId)
+    }
 
   /** ST25's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's bottom-k sketch into the persisted table unless
-    * `batchId` was already applied. An empty batch is skipped entirely
-    * (no write, no marker advance — the ST22 rule). Returns true when
-    * merged.
+    * micro-batch's bottom-k sketch into the persisted table. Returns
+    * true when merged.
     */
   def bottomKMergeBatch(batch: DataFrame, groupCol: String, elemCol: String,
-      k: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.Sketches.bottomK(batch, groupCol, elemCol, k)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = graft.ops.Sketches
-          .merge(prev, bSketch, groupCol, k)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      k: Int, targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.Sketches.bottomK(batch, groupCol, elemCol, k)
+      prev.fold(b)(graft.ops.Sketches.merge(_, b, groupCol, k))
     }
-  }
 
   /** Read the ST25 sketch table's per-group KMV distinct estimates. */
   def bottomKDistinctEstimate(spark: SparkSession, targetPath: String,
-      groupCol: String, k: Int): DataFrame = {
-    Upsert.recover(spark, targetPath)
+      groupCol: String, k: Int): DataFrame =
     graft.ops.Sketches.distinctEstimate(
-      spark.read.parquet(targetPath), groupCol, k)
-  }
+      Upsert.readState(spark, targetPath), groupCol, k)
 
   /** ST31 — streaming GRID-FREE QUANTILE maintenance: the rank-KMV
     * sketch ([[graft.ops.Sketches.rankSketch]], ≤ k rows per group
@@ -933,61 +863,29 @@ object EventStreams {
   def rankSketchOnArrival(rows: DataFrame, groupCol: String,
       valueCol: String, k: Int, targetPath: String,
       checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rankSketchMergeBatch(batch, groupCol, valueCol, k, targetPath,
-          batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      rankSketchMergeBatch(batch, groupCol, valueCol, k, targetPath,
+        batchId)
+    }
 
-  /** ST31's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28 contract: recover, skip empty, refuse replayed batch
-    * ids, atomic swap. Returns true when merged.
+  /** ST31's per-batch kernel (exposed for the replay spec). Returns true
+    * when merged.
     */
   def rankSketchMergeBatch(batch: DataFrame, groupCol: String,
       valueCol: String, k: Int, targetPath: String,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.Sketches.rankSketch(batch, groupCol,
-      valueCol, k)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // rankSketchMerge projects (g, v, cnt, h) — batch_id drops there
-        val merged = graft.ops.Sketches
-          .rankSketchMerge(prev, bSketch, groupCol, k)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.Sketches.rankSketch(batch, groupCol, valueCol, k)
+      prev.fold(b)(graft.ops.Sketches.rankSketchMerge(_, b, groupCol, k))
     }
-  }
 
   /** Read the ST31 table as a live percentile ladder — O(k·|pcts|) per
     * group, no history re-read.
     */
   def rankQuantilesRead(spark: SparkSession, targetPath: String,
-      groupCol: String, pcts: Seq[Int]): DataFrame = {
-    Upsert.recover(spark, targetPath)
+      groupCol: String, pcts: Seq[Int]): DataFrame =
     graft.ops.Sketches.quantilesFromRankSketch(
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol, pcts)
-  }
+      Upsert.readState(spark, targetPath), groupCol, pcts)
 
   /** ST26 — streaming SHARD-MANIFEST maintenance: the dataset card kept
     * live at the ingest door. The persisted state is the per-shard
@@ -999,63 +897,30 @@ object EventStreams {
     * a single manifest over the full history EXACTLY (q217's merge law,
     * live). Unlike the set-union sketches (ST22/ST25) the merge is NOT
     * replay-idempotent — a re-applied batch would double-count — so
-    * here the ST16-style batch-id guard inside the atomic swap is
-    * load-bearing, not just contract-uniform.
+    * here the batch-id guard inside the atomic swap is load-bearing,
+    * not just contract-uniform.
     */
   def manifestOnArrival(rows: DataFrame, idCol: String, textCol: String,
       shards: Int, targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        manifestMergeBatch(batch, idCol, textCol, shards, targetPath,
-          batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      manifestMergeBatch(batch, idCol, textCol, shards, targetPath,
+        batchId)
+    }
 
   /** ST26's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's manifest into the persisted table unless `batchId`
-    * was already applied — the guard that keeps the NON-idempotent
-    * additive merge exactly-once under at-least-once replay. An empty
-    * batch is skipped entirely (no write, no marker advance — the ST22
-    * rule). Returns true when merged.
+    * micro-batch's manifest into the persisted table. Returns true when
+    * merged.
     */
   def manifestMergeBatch(batch: DataFrame, idCol: String, textCol: String,
-      shards: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bMan = graft.ops.Manifest.shardManifest(batch, idCol, textCol,
-      shards)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bMan.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = graft.ops.Manifest
-          .mergeManifests(prev.drop("batch_id"), bMan)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      shards: Int, targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.Manifest.shardManifest(batch, idCol, textCol, shards)
+      prev.fold(b)(graft.ops.Manifest.mergeManifests(_, b))
     }
-  }
 
   /** Read the ST26 manifest table's current dataset-card rows. */
-  def manifestRead(spark: SparkSession, targetPath: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath).drop("batch_id")
-  }
+  def manifestRead(spark: SparkSession, targetPath: String): DataFrame =
+    Upsert.readState(spark, targetPath)
 
   /** ST28 — streaming COUNT-MIN maintenance: live per-group frequency
     * counters at the ingest door. The persisted state is the sparse CMS
@@ -1073,51 +938,22 @@ object EventStreams {
   def cmsOnArrival(rows: DataFrame, groupCol: String, elemCol: String,
       depth: Int, width: Int, targetPath: String,
       checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsMergeBatch(batch, groupCol, elemCol, depth, width, targetPath,
-          batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      cmsMergeBatch(batch, groupCol, elemCol, depth, width, targetPath,
+        batchId)
+    }
 
   /** ST28's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's CMS into the persisted table unless `batchId` was
-    * already applied; empty batches are skipped without advancing the
-    * marker (the ST22 rule). Returns true when merged.
+    * micro-batch's CMS into the persisted table. Returns true when
+    * merged.
     */
   def cmsMergeBatch(batch: DataFrame, groupCol: String, elemCol: String,
-      depth: Int, width: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.LinearSketches.cmsSketch(batch, groupCol,
-      elemCol, depth, width)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // cmsMerge projects (group, r, b, cnt) — batch_id drops there
-        val merged = graft.ops.LinearSketches
-          .cmsMerge(prev, bSketch, groupCol)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      depth: Int, width: Int, targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.LinearSketches.cmsSketch(batch, groupCol, elemCol,
+        depth, width)
+      prev.fold(b)(graft.ops.LinearSketches.cmsMerge(_, b, groupCol))
     }
-  }
 
   /** Probe the ST28 CMS table for point-frequency estimates of
     * `probes` (group, elem) rows — O(probes·depth) lookups against the
@@ -1125,12 +961,9 @@ object EventStreams {
     */
   def cmsEstimateRead(spark: SparkSession, targetPath: String,
       probes: DataFrame, groupCol: String, elemCol: String,
-      depth: Int, width: Int): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.LinearSketches.cmsEstimate(
-      spark.read.parquet(targetPath).drop("batch_id"),
+      depth: Int, width: Int): DataFrame =
+    graft.ops.LinearSketches.cmsEstimate(Upsert.readState(spark, targetPath),
       probes, groupCol, elemCol, depth, width)
-  }
 
   /** ST29 — streaming MOMENT-STATS maintenance: the per-group
     * (n, Σx, Σx²) table ([[graft.ops.Hypothesis.statsTable]], O(groups)
@@ -1146,62 +979,29 @@ object EventStreams {
     */
   def statsOnArrival(rows: DataFrame, groupCol: String, valueCol: String,
       targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        statsMergeBatch(batch, groupCol, valueCol, targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      statsMergeBatch(batch, groupCol, valueCol, targetPath, batchId)
+    }
 
-  /** ST29's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28 contract: recover, skip empty, refuse replayed batch
-    * ids, atomic swap. Returns true when merged.
+  /** ST29's per-batch kernel (exposed for the replay spec). Returns true
+    * when merged.
     */
   def statsMergeBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bStats = graft.ops.Hypothesis.statsTable(batch, groupCol,
-      col(valueCol))
-    if (!exists) {
-      Upsert.writeAtomic(
-        bStats.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // mergeStatsTables projects (g, n, s1, s2) — batch_id drops there
-        val merged = graft.ops.Hypothesis
-          .mergeStatsTables(prev, bStats)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.Hypothesis.statsTable(batch, groupCol, col(valueCol))
+      prev.fold(b)(graft.ops.Hypothesis.mergeStatsTables(_, b))
     }
-  }
 
   /** Welch-probe an arriving cohort's OWN stats against the ST29
     * persisted corpus table — the live A/B read: O(groups) work, no
     * corpus rows.
     */
   def statsWelchRead(spark: SparkSession, targetPath: String,
-      cohort: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Hypothesis.welchFromStats(
-      spark.read.parquet(targetPath).drop("batch_id"),
+      cohort: DataFrame, groupCol: String, valueCol: String): DataFrame =
+    graft.ops.Hypothesis.welchFromStats(Upsert.readState(spark, targetPath),
       graft.ops.Hypothesis.statsTable(cohort, groupCol, col(valueCol)),
       groupCol)
-  }
 
   /** ST30 — streaming CONFUSION-MATRIX maintenance: per-(group,
     * threshold) tp/fp/fn/tn counts
@@ -1223,62 +1023,30 @@ object EventStreams {
   def confusionOnArrival(rows: DataFrame, groupCol: String,
       labelCol: String, scoreCol: String, thresholds: Seq[Double],
       targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        confusionMergeBatch(batch, groupCol, labelCol, scoreCol,
-          thresholds, targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      confusionMergeBatch(batch, groupCol, labelCol, scoreCol,
+        thresholds, targetPath, batchId)
+    }
 
-  /** ST30's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28/ST29 contract: recover, skip empty, refuse replayed
-    * batch ids, atomic swap. Returns true when merged.
+  /** ST30's per-batch kernel (exposed for the replay spec). Returns true
+    * when merged.
     */
   def confusionMergeBatch(batch: DataFrame, groupCol: String,
       labelCol: String, scoreCol: String, thresholds: Seq[Double],
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bCounts = graft.ops.Hypothesis.confusionCounts(batch, groupCol,
-      col(labelCol), col(scoreCol), thresholds)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bCounts.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // mergeConfusion projects (g, thr, tp, fp, fn, tn) — batch_id
-        // drops there
-        val merged = graft.ops.Hypothesis
-          .mergeConfusion(prev, bCounts, groupCol)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ops.Hypothesis.confusionCounts(batch, groupCol,
+        col(labelCol), col(scoreCol), thresholds)
+      prev.fold(b)(graft.ops.Hypothesis.mergeConfusion(_, b, groupCol))
     }
-  }
 
   /** Read the ST30 table as the precision/recall/F1 gate-tuning surface
     * (q233's output, live) — O(groups·thresholds), no corpus rows.
     */
   def confusionRead(spark: SparkSession, targetPath: String,
-      groupCol: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Hypothesis.confusionRatios(
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol)
-  }
+      groupCol: String): DataFrame =
+    graft.ops.Hypothesis.confusionRatios(Upsert.readState(spark, targetPath),
+      groupCol)
 
   /** ST21 — streaming TOPIC ROUTING on arrival: each micro-batch of
     * documents is assigned to its best-matching named term set by the
@@ -1306,61 +1074,31 @@ object EventStreams {
     * order-free-sum statistic: the state is a mergeable sketch in a
     * parquet table, each batch pays O(batch) + |sketch|, and
     * `finalizeCovariance` over the table yields the exact full-history
-    * matrix at any moment. Crash contract: `Upsert.recover` before the
-    * existence check, atomic swap after the merge — PLUS a replay guard
-    * that ST5 doesn't need: foreachBatch is at-least-once, and an
-    * ADDITIVE merge (unlike ST5's by-key replace) double-counts a
-    * replayed batch. The sketch therefore carries a `(-2, -2, batchId)`
-    * marker row inside the same atomic swap; a batch whose id is ≤ the
-    * stored marker was already applied and is skipped. The marker cell
-    * is outside the sketch's value domain (cells have i,j ≥ 0; means
-    * j = -1; count (-1,-1)), so `finalizeCovariance` never sees it.
+    * matrix at any moment. Unlike ST5's by-key replace, an ADDITIVE
+    * merge double-counts a replayed batch (foreachBatch is
+    * at-least-once), so the table goes through
+    * [[graft.ops.Upsert.mergeBatch]]: every cell row carries the
+    * `batch_id` of the last merged batch inside the same atomic swap,
+    * and replayed or empty batches are skipped. `finalizeCovariance`
+    * selects cells by (i, j) and never reads `batch_id`.
     */
   def covarianceOnArrival(vecs: DataFrame, vecCol: String, idCol: String,
       targetPath: String, checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        covarianceMergeBatch(batch, vecCol, idCol, targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(vecs, checkpoint) { (batch, batchId) =>
+      covarianceMergeBatch(batch, vecCol, idCol, targetPath, batchId)
+    }
 
   /** ST16's per-batch kernel, exposed for the replay-idempotence spec:
     * merge one micro-batch's covariance sketch into the persisted table
-    * unless `batchId` was already applied (see [[covarianceOnArrival]]).
-    * Returns true when the batch was merged, false when skipped as a
-    * replay.
+    * (see [[covarianceOnArrival]]). Returns true when the batch was
+    * merged, false when skipped as empty or as a replay.
     */
   def covarianceMergeBatch(batch: DataFrame, vecCol: String, idCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    val marker = spark.range(1).select(
-      lit(-2).as("i"), lit(-2).as("j"), lit(batchId).as("s"))
-    if (!exists) {
-      val sums = graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
-      Upsert.writeAtomic(sums.unionByName(marker), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.filter(col("i") === -2 && col("j") === -2)
-        .agg(coalesce(max(col("s")), lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false // at-least-once replay — already merged
-      else {
-        val sums = graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
-        val merged = graft.ext.Similarity.mergeCovarianceSums(
-          prev.filter(!(col("i") === -2 && col("j") === -2)), sums)
-        Upsert.writeAtomic(merged.unionByName(marker), targetPath)
-        true
-      }
+      targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
+      prev.fold(b)(graft.ext.Similarity.mergeCovarianceSums(_, b))
     }
-  }
 
   /** ST18 — streaming CLUSTER ASSIGNMENT on arrival: each micro-batch of
     * payloads adopts corpus cluster labels through the frozen frame-0
@@ -1438,6 +1176,15 @@ object EventStreams {
       }
       .start()
 
+  /** ST12 — ST9's streaming ingest gate grown the STRING signal: each
+    * micro-batch renders the FOUR-signal verdict
+    * ([[graft.ext.Dedup.ingestGateWithEdit]] — exact / Jaccard / simhash /
+    * edit-distance-on-key against the four frozen corpus structures,
+    * including the [[graft.ext.Fuzzy.segmentIndex]]). The arriving stream
+    * must carry both textCol and the short key column `editCol` (derive it
+    * upstream with a select — it is a pure projection). Sink receives
+    * (idCol, exact_dup, jac_dup, sh_dup, ed_dup, admit).
+    */
   def gateWithEditOnArrival(docs: DataFrame,
       index: graft.ext.Dedup.GramIndex, corpusSig: DataFrame,
       corpusTexts: DataFrame, editIndex: DataFrame, editCorpus: DataFrame,
@@ -1537,58 +1284,61 @@ object EventStreams {
       }
       .start()
 
+  /** The per-host first-come-first-served cap shared by ST33 and ST36:
+    * ranks `rows` within each `hostCol` value by `orderCol`
+    * (`row_number` — the [[graft.ext.Curation.perHostCap]] window, so
+    * the partial group limit bounds the exchange) and appends `admit`:
+    * true iff the host's previously admitted count in `prev` (the
+    * (host, n_admitted) state) plus the row's rank is ≤ `cap`.
+    */
+  private def capAdmit(rows: DataFrame, hostCol: String, orderCol: String,
+      prev: Option[DataFrame], cap: Int): DataFrame = {
+    val ranked = rows.withColumn("__rn", row_number().over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy(col(hostCol)).orderBy(col(orderCol))))
+    val withPrev = prev.fold(ranked.withColumn("__prev", lit(0L)))(p =>
+      ranked.join(broadcast(p.select(col("host").as(hostCol),
+        col("n_admitted").as("__prev"))), Seq(hostCol), "left_outer"))
+    withPrev
+      .withColumn("admit",
+        col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
+      .drop("__rn", "__prev")
+  }
+
+  /** Fold the hosts of `admitted` rows into the (host, n_admitted) cap
+    * state: counts ADD, so the state stays O(hosts) forever.
+    */
+  private def capCounts(prev: Option[DataFrame], admitted: DataFrame,
+      hostCol: String): DataFrame = {
+    val counts = admitted.groupBy(col(hostCol).as("host"))
+      .agg(count(lit(1)).as("n_admitted"))
+    prev.fold(counts)(_.unionByName(counts)
+      .groupBy("host").agg(sum("n_admitted").as("n_admitted")))
+  }
+
   /** ST33's per-batch kernel (exposed for the replay spec): render
     * per-document HOST-CAP verdicts for one micro-batch against the
     * persisted per-host admitted counts, then fold the batch's admits
-    * into the state — unless `batchId` was already applied (the
-    * ST26/ST28 batch-id guard: count addition is NOT replay-idempotent).
-    * Within a batch, docs compete FCFS by `orderCol` (`row_number` per
-    * host — the [[graft.ext.Curation.perHostCap]] window, so the
-    * partial group limit bounds the exchange); a doc admits iff
-    * prior_admitted + its in-batch rank ≤ cap. State stays O(hosts)
-    * forever. Returns None on replay/empty (no write, no verdicts),
-    * else Some(verdicts) MATERIALIZED before the state swap (the
-    * verdict plan reads the state parquet the swap replaces).
+    * into the state through [[graft.ops.Upsert.mergeBatch]] (count
+    * addition is NOT replay-idempotent). Within a batch, docs compete
+    * FCFS by `orderCol` ([[capAdmit]]). Returns None on replay/empty
+    * (no write, no verdicts), else Some(verdicts) MATERIALIZED before
+    * the state swap (the verdict plan reads the state parquet the swap
+    * replaces).
     */
   def hostCapMergeBatch(batch: DataFrame, idCol: String, urlCol: String,
       orderCol: String, cap: Int, targetPath: String, batchId: Long)
       : Option[DataFrame] = {
     require(cap >= 1, s"hostCapMergeBatch: cap=$cap")
-    val spark = batch.sparkSession
-    import spark.implicits._
-    Upsert.recover(spark, targetPath)
-    if (batch.isEmpty) return None
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(tgt)
-    val prev =
-      if (exists) spark.read.parquet(targetPath)
-      else Seq.empty[(String, Long, Long)]
-        .toDF("host", "n_admitted", "batch_id")
-    if (exists) {
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) return None
+    Upsert.mergeBatch(batch, targetPath, batchId) { prev =>
+      val verdicts = capAdmit(batch.withColumn("__host",
+          graft.ext.Curation.urlHost(col(urlCol))), "__host", orderCol,
+          prev, cap)
+        .withColumn("host", col("__host"))
+        .drop("__host")
+        .localCheckpoint() // verdicts must outlive the state swap
+      (capCounts(prev, verdicts.filter(col("admit")), "host"), verdicts)
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__host")).orderBy(col(orderCol))
-    val verdicts = batch
-      .withColumn("__host", graft.ext.Curation.urlHost(col(urlCol)))
-      .withColumn("__rn", row_number().over(w))
-      .join(broadcast(prev.select(col("host").as("__host"),
-        col("n_admitted").as("__prev"))), Seq("__host"), "left_outer")
-      .withColumn("admit",
-        col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
-      .withColumn("host", col("__host"))
-      .drop("__rn", "__prev", "__host")
-      .localCheckpoint() // verdicts must outlive the state swap below
-    val merged = prev.select(col("host"), col("n_admitted"))
-      .unionByName(verdicts.filter(col("admit"))
-        .groupBy("host").agg(count(lit(1)).as("n_admitted")))
-      .groupBy("host").agg(sum("n_admitted").as("n_admitted"))
-      .withColumn("batch_id", lit(batchId))
-    Upsert.writeAtomic(merged, targetPath)
-    Some(verdicts)
   }
 
   /** ST33 — STREAMING PER-HOST CAP: the [[graft.ext.Curation.perHostCap]]
@@ -1603,21 +1353,14 @@ object EventStreams {
   def hostCapOnArrival(docs: DataFrame, idCol: String, urlCol: String,
       orderCol: String, cap: Int, targetPath: String, checkpoint: String)(
       sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hostCapMergeBatch(batch, idCol, urlCol, orderCol, cap,
-          targetPath, batchId).foreach(sink)
-      }
-      .start()
+    onArrival(docs, checkpoint) { (batch, batchId) =>
+      hostCapMergeBatch(batch, idCol, urlCol, orderCol, cap, targetPath,
+        batchId).foreach(sink)
+    }
 
   /** Read the ST33 per-host admitted-count state. */
-  def hostCapRead(spark: SparkSession, targetPath: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath).select("host", "n_admitted")
-  }
+  def hostCapRead(spark: SparkSession, targetPath: String): DataFrame =
+    Upsert.readState(spark, targetPath).select("host", "n_admitted")
 
   // ---------------------------------------------------------------- ST34
 
@@ -1634,53 +1377,23 @@ object EventStreams {
   def driftOnArrival(rows: DataFrame, groupCol: String, valueCol: String,
       thresholds: Seq[Long], targetPath: String,
       checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftMergeBatch(batch, groupCol, valueCol, thresholds,
-          targetPath, batchId)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, batchId) =>
+      driftMergeBatch(batch, groupCol, valueCol, thresholds, targetPath,
+        batchId)
+    }
 
-  /** ST34's per-batch kernel (exposed for the replay spec) — the
-    * additive-state contract: recover, skip empty, refuse replayed
-    * batch ids, atomic swap. Returns true when merged.
+  /** ST34's per-batch kernel (exposed for the replay spec). Returns true
+    * when merged.
     */
   def driftMergeBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      thresholds: Seq[Long], targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bCounts = batch
-      .groupBy(col(groupCol),
-        graft.ops.Drift.bucketOf(col(valueCol), thresholds).as("bucket"))
-      .agg(count(lit(1)).as("n_live"))
-    if (!exists) {
-      Upsert.writeAtomic(
-        bCounts.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = prev.drop("batch_id")
-          .unionByName(bCounts)
-          .groupBy(groupCol, "bucket")
-          .agg(sum("n_live").as("n_live"))
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+      thresholds: Seq[Long], targetPath: String, batchId: Long): Boolean =
+    mergeState(batch, targetPath, batchId) { prev =>
+      val b = batch.groupBy(col(groupCol),
+          graft.ops.Drift.bucketOf(col(valueCol), thresholds).as("bucket"))
+        .agg(count(lit(1)).as("n_live"))
+      prev.fold(b)(_.unionByName(b).groupBy(groupCol, "bucket")
+        .agg(sum("n_live").as("n_live")))
     }
-  }
 
   /** Read the ST34 state as the live drift alarm: per-group PSI terms
     * of the accumulated stream against the frozen reference count
@@ -1689,11 +1402,9 @@ object EventStreams {
     * O(groups · buckets), no stream rows.
     */
   def driftRead(spark: SparkSession, targetPath: String, groupCol: String,
-      ref: DataFrame): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Drift.psiOfCounts(ref,
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol)
-  }
+      ref: DataFrame): DataFrame =
+    graft.ops.Drift.psiOfCounts(ref, Upsert.readState(spark, targetPath),
+      groupCol)
 
   // ---------------------------------------------------------------- ST35
 
@@ -1711,34 +1422,24 @@ object EventStreams {
   def frontierOnArrival(rows: DataFrame, keyCol: String,
       p: graft.ext.Bloom.Params, targetPath: String,
       checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        frontierMergeBatch(batch, keyCol, p, targetPath)
-        ()
-      }
-      .start()
+    onArrival(rows, checkpoint) { (batch, _) =>
+      frontierMergeBatch(batch, keyCol, p, targetPath)
+    }
 
-  /** ST35's per-batch kernel: recover, skip empty, OR-merge, atomic
-    * swap. Deliberately no replay guard — see [[frontierOnArrival]].
+  /** ST35's per-batch kernel: skip empty, OR-merge into the recovered
+    * state, atomic swap. Deliberately no replay guard — see
+    * [[frontierOnArrival]].
     */
   def frontierMergeBatch(batch: DataFrame, keyCol: String,
-      p: graft.ext.Bloom.Params, targetPath: String): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bWords = graft.ext.Bloom.build(batch, keyCol, p)
-    val merged =
-      if (!exists) bWords
-      else graft.ext.Bloom.merge(spark.read.parquet(targetPath), bWords)
-    Upsert.writeAtomic(merged, targetPath)
-    true
-  }
+      p: graft.ext.Bloom.Params, targetPath: String): Boolean =
+    if (batch.isEmpty) false
+    else {
+      val bWords = graft.ext.Bloom.build(batch, keyCol, p)
+      val merged = Upsert.current(batch.sparkSession, targetPath)
+        .fold(bWords)(graft.ext.Bloom.merge(_, bWords))
+      Upsert.writeAtomic(merged, targetPath)
+      true
+    }
 
   /** Probe the ST35 frontier: (id, key, maybe_present) for an arriving
     * candidate set — false positives possible (skip a re-crawl), false
@@ -1746,11 +1447,9 @@ object EventStreams {
     */
   def frontierRead(spark: SparkSession, targetPath: String,
       candidates: DataFrame, keyCol: String, idCol: String,
-      p: graft.ext.Bloom.Params): DataFrame = {
-    Upsert.recover(spark, targetPath)
+      p: graft.ext.Bloom.Params): DataFrame =
     graft.ext.Bloom.probe(candidates, keyCol, idCol,
-      spark.read.parquet(targetPath), p)
-  }
+      Upsert.readState(spark, targetPath), p)
 
   // ---------------------------------------------------------------- ST36
 
@@ -1761,15 +1460,16 @@ object EventStreams {
     * persisted ST35 Bloom state AS OF BATCH START (a URL admitted in an
     * earlier wave comes back seen), (3) payload MIME sniff
     * ([[graft.ext.Containers.sniffMime]] — only `text/plain` enters the
-    * text pipeline), (4) the per-host cap over survivors of 1–3 with
-    * the accumulated ST33-style counts (FCFS by `idCol` within the
-    * batch). Then the states advance: admitted counts fold into the cap
-    * table, and the batch's ADMITTED urls — now crawled — OR into the
-    * frontier.
+    * text pipeline), (4) the ST33 per-host cap ([[capAdmit]]) over
+    * survivors of 1–3 with the accumulated counts (FCFS by `idCol`
+    * within the batch). Then the states advance: admitted counts fold
+    * into the cap table, and the batch's ADMITTED urls — now crawled —
+    * OR into the frontier.
     *
-    * Replay: the guard rides the CAP state (the only non-idempotent
-    * one); a replayed batch id returns None before any read, and the
-    * frontier — which would have been a no-op anyway (∨) — is never
+    * Replay: the [[graft.ops.Upsert.mergeBatch]] guard rides the CAP
+    * state (the only non-idempotent one) and the cap swaps first; a
+    * replayed batch id returns None before the frontier is read, and
+    * the frontier — which would have been a no-op anyway (∨) — is never
     * re-touched, so the two states can never diverge by one batch.
     * Verdicts materialize (localCheckpoint) BEFORE either swap.
     */
@@ -1781,76 +1481,49 @@ object EventStreams {
     require(cap >= 1, s"crawlDoorMergeBatch: cap=$cap")
     val spark = batch.sparkSession
     import spark.implicits._
-    Upsert.recover(spark, frontierPath)
-    Upsert.recover(spark, capPath)
-    if (batch.isEmpty) return None
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val capExists = new org.apache.hadoop.fs.Path(capPath)
-      .getFileSystem(hconf).exists(new org.apache.hadoop.fs.Path(capPath))
-    val prev =
-      if (capExists) spark.read.parquet(capPath)
-      else Seq.empty[(String, Long, Long)]
-        .toDF("host", "n_admitted", "batch_id")
-    if (capExists) {
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) return None
-    }
-    // (1) robots — rule table is per-host small: broadcast inside allowed
-    val rob = graft.ext.Robots.allowed(
-      batch.select(col(idCol), col(hostCol), col(pathCol)),
-      idCol, hostCol, pathCol, rules)
-      .select(col(idCol), col("allowed").as("robots_ok"))
-    // (2) frontier novelty vs the state at batch start
-    val fExists = new org.apache.hadoop.fs.Path(frontierPath)
-      .getFileSystem(hconf)
-      .exists(new org.apache.hadoop.fs.Path(frontierPath))
-    val novel =
-      if (fExists) graft.ext.Bloom.probe(
-        batch.select(col(idCol), col(urlCol)), urlCol, idCol,
-        spark.read.parquet(frontierPath), p)
-        .select(col(idCol), (!col("maybe_present")).as("novel"))
-      else batch.select(col(idCol)).withColumn("novel", lit(true))
-    // (3) MIME sniff — per-payload JVM byte logic, batch-sized map
-    val mime = batch.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, b) =>
-        (id, graft.ext.Containers.sniffMime(b) == "text/plain")
+    Upsert.mergeBatch(batch, capPath, batchId) { prevCap =>
+      // (1) robots — rule table is per-host small: broadcast inside allowed
+      val rob = graft.ext.Robots.allowed(
+        batch.select(col(idCol), col(hostCol), col(pathCol)),
+        idCol, hostCol, pathCol, rules)
+        .select(col(idCol), col("allowed").as("robots_ok"))
+      // (2) frontier novelty vs the state at batch start
+      val frontier = Upsert.current(spark, frontierPath)
+      val novel = frontier.fold(
+        batch.select(col(idCol)).withColumn("novel", lit(true)))(f =>
+        graft.ext.Bloom.probe(batch.select(col(idCol), col(urlCol)),
+          urlCol, idCol, f, p)
+          .select(col(idCol), (!col("maybe_present")).as("novel")))
+      // (3) MIME sniff — per-payload JVM byte logic, batch-sized map
+      val mime = batch.select(col(idCol).cast("long"), col(payloadCol))
+        .as[(Long, Array[Byte])]
+        .map { case (id, b) =>
+          (id, graft.ext.Containers.sniffMime(b) == "text/plain")
+        }
+        .toDF(idCol, "mime_ok")
+      val gated = batch.select(col(idCol), col(hostCol), col(urlCol))
+        .join(rob, idCol).join(novel, idCol).join(mime, idCol)
+      // (4) per-host cap over survivors, FCFS by idCol, prior counts added
+      val surv = capAdmit(
+          gated.filter(col("robots_ok") && col("novel") && col("mime_ok")),
+          hostCol, idCol, prevCap, cap)
+        .select(col(idCol), col("admit").as("__adm"))
+      val verdicts = gated.join(surv, Seq(idCol), "left_outer")
+        .select(col(idCol), col(hostCol), col(urlCol), col("robots_ok"),
+          col("novel"), col("mime_ok"),
+          coalesce(col("__adm"), lit(false)).as("admitted"))
+        .localCheckpoint() // must outlive both state swaps
+      (capCounts(prevCap, verdicts.filter(col("admitted")), hostCol),
+        (verdicts, frontier))
+    }.map { case (verdicts, frontier) =>
+      val admitted = verdicts.filter(col("admitted"))
+      if (!admitted.isEmpty) {
+        val aw = graft.ext.Bloom.build(admitted.select(col(urlCol)), urlCol, p)
+        Upsert.writeAtomic(frontier.fold(aw)(graft.ext.Bloom.merge(_, aw)),
+          frontierPath)
       }
-      .toDF(idCol, "mime_ok")
-    val gated = batch.select(col(idCol), col(hostCol), col(urlCol))
-      .join(rob, idCol).join(novel, idCol).join(mime, idCol)
-    // (4) per-host cap over survivors, FCFS by idCol, prior counts added
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(hostCol)).orderBy(col(idCol))
-    val surv = gated.filter(col("robots_ok") && col("novel") && col("mime_ok"))
-      .withColumn("__rn", row_number().over(w))
-      .join(broadcast(prev.select(col("host").as(hostCol),
-        col("n_admitted").as("__prev"))), Seq(hostCol), "left_outer")
-      .withColumn("__adm", col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
-      .select(col(idCol), col("__adm"))
-    val verdicts = gated.join(surv, Seq(idCol), "left_outer")
-      .select(col(idCol), col(hostCol), col(urlCol), col("robots_ok"),
-        col("novel"), col("mime_ok"),
-        coalesce(col("__adm"), lit(false)).as("admitted"))
-      .localCheckpoint() // must outlive both state swaps below
-    val admitted = verdicts.filter(col("admitted"))
-    val mergedCap = prev.select(col("host"), col("n_admitted"))
-      .unionByName(admitted
-        .select(col(hostCol).as("host"))
-        .groupBy("host").agg(count(lit(1)).as("n_admitted")))
-      .groupBy("host").agg(sum("n_admitted").as("n_admitted"))
-      .withColumn("batch_id", lit(batchId))
-    Upsert.writeAtomic(mergedCap, capPath)
-    if (!admitted.isEmpty) {
-      val aw = graft.ext.Bloom.build(admitted.select(col(urlCol)), urlCol, p)
-      val mergedF =
-        if (fExists) graft.ext.Bloom.merge(
-          spark.read.parquet(frontierPath), aw)
-        else aw
-      Upsert.writeAtomic(mergedF, frontierPath)
+      verdicts
     }
-    Some(verdicts)
   }
 
   /** ST36 — the STREAMING CRAWL DOOR: q261's four-gate audit table
@@ -1863,14 +1536,9 @@ object EventStreams {
       rules: DataFrame, p: graft.ext.Bloom.Params, cap: Int,
       frontierPath: String, capPath: String, checkpoint: String)(
       sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        crawlDoorMergeBatch(batch, idCol, hostCol, pathCol, urlCol,
-          payloadCol, rules, p, cap, frontierPath, capPath, batchId)
-          .foreach(sink)
-      }
-      .start()
+    onArrival(docs, checkpoint) { (batch, batchId) =>
+      crawlDoorMergeBatch(batch, idCol, hostCol, pathCol, urlCol,
+        payloadCol, rules, p, cap, frontierPath, capPath, batchId)
+        .foreach(sink)
+    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.ext.{Dedup, DedupCluster, Packing, Repetition, Retrieval, Sampling, Similarity, TextAnalysis}
 import graft.functions.FrequentItems
-import graft.ops.{AsOfJoin, Cdc, Graph, RangeJoin, Salting, StorageLayout, Upsert}
+import graft.ops.{AsOfJoin, Cdc, Graph, RangeJoin, StorageLayout}
 
 /** User-facing entry point: `import graft.syntax._` puts the engine's
   * operators on every DataFrame, so pipelines read as method chains
@@ -37,9 +37,6 @@ object syntax {
     def minhashSignature(idCol: String, textCol: String): DataFrame =
       Dedup.minHashSignature(df, idCol, textCol)
 
-    def lshCandidates(idCol: String, bands: Seq[Seq[String]]): DataFrame =
-      Dedup.lshCandidatePairs(df, idCol, bands)
-
     def ngrams(idCol: String, textCol: String, n: Int): DataFrame =
       Dedup.ngramsExploded(df, idCol, textCol, n)
 
@@ -59,17 +56,9 @@ object syntax {
       Dedup.jaccardSimilarityJoin(df, idCol, textCol, n, tauNum, tauDen)
 
     // --- similarity ------------------------------------------------------
-    def cosineTopK(vecCol: String, idCol: String, query: DataFrame,
-        k: Int): DataFrame =
-      Similarity.bruteForceTopK(df, vecCol, idCol, query, k)
-
     def knnJoin(vecCol: String, idCol: String, queries: DataFrame,
         k: Int, qidCol: String = "qid", qvCol: String = "qv"): DataFrame =
       Similarity.knnJoin(df, vecCol, idCol, queries, k, qidCol, qvCol)
-
-    def nearDuplicates(vecCol: String, idCol: String,
-        threshold: Double): DataFrame =
-      Similarity.nearDupPairs(df, vecCol, idCol, threshold)
 
     def nearDuplicatesBlocked(vecCol: String, idCol: String,
         threshold: Double, blocks: Int = 16): DataFrame =
@@ -112,18 +101,7 @@ object syntax {
         maxHops: Int): DataFrame =
       Graph.bfsHops(df, srcCol, dstCol, seeds, maxHops)
 
-    // --- joins / upserts -------------------------------------------------
-    def bandedJoin(right: DataFrame, leftVal: String, rightVal: String,
-        width: Double): DataFrame =
-      RangeJoin.banded(df, right, leftVal, rightVal, width)
-
-    def upsertInto(base: DataFrame, key: String): DataFrame =
-      Upsert.upsert(base, df, key)
-
-    def saltedAggregate(keyCol: String, saltBy: String, buckets: Int,
-        aggs: Map[String, (String, String)]): DataFrame =
-      Salting.saltedAgg(df, keyCol, saltBy, buckets, aggs)
-
+    // --- joins ------------------------------------------------------------
     def intervalJoin(right: DataFrame, lStart: String, lEnd: String,
         rStart: String, rEnd: String, keys: Seq[String],
         cellWidth: Long): DataFrame =
@@ -179,26 +157,17 @@ object syntax {
         files: Int): Unit =
       StorageLayout.hilbertWrite(df, xCol, yCol, path, files)
 
-    // --- round-12 sugar: sketches, manifests, agreement ------------------
-    def bottomKSketch(groupCol: String, elemCol: String, k: Int): DataFrame =
-      graft.ops.Sketches.bottomK(df, groupCol, elemCol, k)
-
+    // --- round-12 sugar: manifests -----------------------------------------
     def shardManifest(idCol: String, textCol: String, shards: Int): DataFrame =
       graft.ops.Manifest.shardManifest(df, idCol, textCol, shards)
-
-    def raterKappa(groupCol: String, raterA: Column,
-        raterB: Column): DataFrame =
-      graft.ops.Agreement.cohenKappa(df, groupCol, raterA, raterB)
   }
 
   implicit class GraftTextColumn(private val text: Column) extends AnyVal {
     def languageId: Column = TextAnalysis.languageId(text)
     def tokenCount: Column = TextAnalysis.tokenCount(text)
-    def bpeishTokens: Column = TextAnalysis.bpeishTokenCount(text)
     def uniqueTokenRatio: Column = TextAnalysis.uniqueTokenRatio(text)
     def stopwordRatio: Column = TextAnalysis.stopwordRatio(text)
     def fingerprint: Column = TextAnalysis.fingerprint(text)
-    def simhash16: Column = Dedup.simHash16(text)
     def qualityFlags: Column = TextAnalysis.qualityFlags(text)
     def maskWords(words: Seq[String], mask: String): Column =
       TextAnalysis.maskWords(text, words, mask)

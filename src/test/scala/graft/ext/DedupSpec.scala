@@ -195,6 +195,13 @@ class DedupSpec extends SparkSpec {
       java.lang.Long.bitCount(m(9L) ^ m(50L))
   }
 
+  test("jaccardProbes rejects a threshold outside (0, 1]") {
+    val idx = Dedup.gramIndex(docs, "doc_id", "text", n = 2)
+    val e = intercept[IllegalArgumentException](
+      Dedup.jaccardProbes(idx, tauNum = 3, tauDen = 2))
+    e.getMessage should include ("jaccardProbes")
+  }
+
   test("GramIndex: one build serves jaccard + cosine + containment identically") {
     import spark.implicits._
     val rnd = new scala.util.Random(47)

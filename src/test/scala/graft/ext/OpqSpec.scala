@@ -100,6 +100,14 @@ class OpqSpec extends SparkSpec {
     }
   }
 
+  test("crossSums fails loudly when the two inputs share no id") {
+    val a = Seq((1L, Array(1.0, 2.0))).toDF("id", "x")
+    val b = Seq((2L, Array(3.0, 4.0))).toDF("id", "q")
+    val e = intercept[IllegalArgumentException](
+      Opq.crossSums(a, "x", b, "q", "id"))
+    e.getMessage should include ("disjoint")
+  }
+
   test("trainRotation: R is orthogonal (R·Rᵀ = I)") {
     val r = Opq.trainRotation(planted, "embedding", "vec_id",
       m = 2, ksub = 4, alternations = 2, maxIter = 10)

@@ -566,6 +566,11 @@ class EventStreamsSpec extends SparkSpec {
       Similarity.covarianceMatrix((b1 ++ b2).toDF("vec_id", "embedding"),
         "embedding", "vec_id").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+    // empty batch: skipped — no write, the stored batch id does not advance
+    val before = spark.read.parquet(s"$dir/t").collect().toSet
+    EventStreams.covarianceMergeBatch(b1.take(0).toDF("vec_id", "embedding"),
+      "embedding", "vec_id", s"$dir/t", 99L) shouldBe false
+    spark.read.parquet(s"$dir/t").collect().toSet shouldBe before
   }
 
   test("ST18 streaming cluster assignment: copies adopt, novel payloads found clusters") {
@@ -780,6 +785,13 @@ class EventStreamsSpec extends SparkSpec {
     EventStreams.distinctMergeBatch(b2.toDF("doc_id", "text"), "text",
       s"$dir/t", 1L) shouldBe false
     EventStreams.distinctEstimate(spark, s"$dir/t") shouldBe streamed
+    // empty batch: skipped — no write, the stored batch id does not advance
+    def stored() = spark.read.parquet(s"$dir/t")
+      .select(hex(col("sketch")), col("batch_id")).collect().toSeq
+    val before = stored()
+    EventStreams.distinctMergeBatch(b1.take(0).toDF("doc_id", "text"),
+      "text", s"$dir/t", 99L) shouldBe false
+    stored() shouldBe before
   }
 
   test("ST25 streaming bottom-k sketch: streamed merge ≡ cold rebuild bit-for-bit, replay no-op") {
@@ -821,9 +833,11 @@ class EventStreamsSpec extends SparkSpec {
     EventStreams.bottomKMergeBatch(withGrp(b2.toDF("doc_id", "text")),
       "grp", "text", 32, s"$dir/t", 1L) shouldBe false
     // empty batch: no write, no marker advance
+    val before = spark.read.parquet(s"$dir/t").collect().toSet
     EventStreams.bottomKMergeBatch(
       withGrp(b1.take(0).toDF("doc_id", "text")),
       "grp", "text", 32, s"$dir/t", 99L) shouldBe false
+    spark.read.parquet(s"$dir/t").collect().toSet shouldBe before
   }
 
   test("ST26 streaming shard manifest: streamed merge ≡ cold recompute; replay guard is load-bearing") {
